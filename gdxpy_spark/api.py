@@ -91,8 +91,13 @@ class GdxEngine:
     def gload(self, pattern: str, path: str | None = None) -> dict[str, DataFrame]:
         """Expand a comma-separated, fnmatch-style symbol spec against the
         catalog; load each match and register it as temp view
-        `gdx_<name>`. Returns {name: DataFrame}."""
-        cat = [r["name"] for r in self.symbols(path).select("name").collect()]
+        `gdx_<name>`. Returns {name: DataFrame}. The catalog is read in
+        this process (a few mapped pages of each file), not by a Spark job."""
+        cat = [
+            s.name
+            for p in gdx_datasource._expand_paths(self._path(path))
+            for s in gdx_datasource.open_gdx(p).symbols
+        ]
         wanted: list[str] = []
         for part in pattern.split(","):
             part = part.strip()

@@ -15,13 +15,16 @@ Schemas by symbol type (long format, SURVEY §1.2 mapping):
 
 Scale design: one InputPartition per (symbol, chunk) — the codec stores
 chunk offsets every CHUNK records, so a single large symbol splits across
-tasks; partitions decode their byte range only and emit Arrow
-RecordBatches (vectorized, never per-record Python↔JVM — the reference's
-per-record C-call bottleneck, SURVEY §3.1, is avoided structurally).
+tasks; a partition maps the file, decodes only its chunk to numpy
+columns (gdx_codec.Columns) and builds the Arrow RecordBatch straight
+from them — key columns by ``take`` on the file's UEL label array, value
+columns from float64 arrays — with no per-record Python objects and no
+per-record Python↔JVM calls (the reference's per-record C-call
+bottleneck, SURVEY §3.1, is avoided structurally).
 Keyed slices additionally prune at plan time — opt-in via
 ``.option("pushdown", "true")``: PushdownGdxSymbolReader implements
 Spark's pushFilters (4.1 Python-DataSource pushdown) and tests each
-predicate on k1..kdim / scenario against the v2 container's per-chunk
+predicate on k1..kdim / scenario against the container's (v2+) per-chunk
 min/max key-label statistics (gdx_codec.GdxFile.chunk_stats) — chunks
 that cannot match are never scheduled, the parquet row-group-stats
 pattern. Pruning is partition-level only: every filter is returned to
@@ -53,6 +56,7 @@ import pickle
 import shutil
 import uuid
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -239,40 +243,32 @@ class GdxSymbolReader(DataSourceReader):
         f = open_gdx(partition.path)
         m = f.symbols[partition.sym_idx]
         chunk = partition.chunk if f.n_chunks(partition.sym_idx) > 1 else None
-        data = f.read_records(partition.sym_idx, chunk=chunk)
-        cols: dict[str, pa.Array] = {}
-        for d in range(m.dim):
-            cols[f"k{d + 1}"] = pa.array(
-                [k[d] for k in data.keys], type=pa.string()
-            )
+        c = f.read_columns(partition.sym_idx, chunk=chunk)
+        if not len(c):
+            return
+        labels = pa.array(f.uels, type=pa.string())
+        cols: dict[str, pa.Array] = {
+            f"k{d + 1}": labels.take(pa.array(c.codes[d] - 1)) for d in range(m.dim)
+        }
         if m.type == DT_SET:
-            cols["text"] = pa.array(data.text, type=pa.string())
+            cols["text"] = pa.array(f.text_table, type=pa.string()).take(pa.array(c.text))
         elif m.type == DT_PAR:
-            cols["value"] = pa.array(
-                [v[0] for v in data.values], type=pa.float64()
-            )
-            cols["is_eps"] = pa.array(
-                [bool(e & 1) for e in data.eps_mask], type=pa.bool_()
-            )
+            cols["value"] = pa.array(c.values[:, 0])
+            cols["is_eps"] = pa.array((c.eps & 1).astype(bool))
         else:
             for j, fname in enumerate(VALUE_FIELDS):
-                cols[fname] = pa.array(
-                    [v[j] for v in data.values], type=pa.float64()
-                )
-            cols["eps_mask"] = pa.array(data.eps_mask, type=pa.int32())
+                cols[fname] = pa.array(c.values[:, j])
+            cols["eps_mask"] = pa.array(c.eps.astype(np.int32))
         if partition.scenario is not None:
-            cols["scenario"] = pa.array(
-                [partition.scenario] * len(data.keys), type=pa.string()
-            )
-        if data.keys:
-            yield pa.RecordBatch.from_pydict(cols)
+            cols["scenario"] = pa.repeat(pa.scalar(partition.scenario, pa.string()), len(c))
+        yield pa.RecordBatch.from_pydict(cols)
 
 
 class PushdownGdxSymbolReader(GdxSymbolReader):
     """Chunk/scenario-pruning reader, selected by .option("pushdown",
     "true"). pushFilters prunes both partition levels — files by the
     scenario column (= file stem, gdxpy's R12 multi-scenario axis) and
-    chunks by the v2 per-chunk min/max key-label stats. All filters are
+    chunks by the per-chunk min/max key-label stats. All filters are
     handed back to Spark for row-level re-evaluation, so a stale or
     absent stats section can only cost performance, never rows — within
     one plan. Across plans, see the module-docstring caveat: Spark 4.1

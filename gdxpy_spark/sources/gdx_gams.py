@@ -1,79 +1,67 @@
-"""Clean-room reader/writer for the GAMS GDX **version-7 byte layout**.
+"""Clean-room reader/writer for the GAMS GDX **version-7 byte layout**, so
+`format("gdx")` opens GAMS-produced files as well as the GDXPY7
+container of gdx_codec.py (sniffed by magic: gdx_datasource.open_gdx).
 
-The round-1 engine shipped only the `GDXPY7` container (gdx_codec.py) —
-a clean-room implementation of the GDX *data model* but not the GAMS
-byte layout, so a GAMS-produced ``.gdx`` could not be opened. This
-module implements the published V7 container structure so the
-`format("gdx")` DataSource can open both layouts (sniffed by magic;
-see gdx_datasource.open_gdx).
-
-What is EXACT here (published verbatim in public sources — gclgms.h and
-the open-sourced GAMS-dev/gdx implementation):
+EXACT here (published verbatim in gclgms.h and the open-sourced
+GAMS-dev/gdx implementation):
 
 - header: one byte ``123`` then the ShortString ``"GAMSGDX"``; file
   version integer 7; compression flag integer
 - section markers: ``MARK_BOI = 19510624`` (int) and the strings
   ``"_UEL_" "_SYMB_" "_SETT_" "_ACRO_" "_DOMS_" "_DATA_"``
-- special-value sentinel doubles (gclgms.h GMS_SV_*):
-  UNDEF=1.0e300, NA=2.0e300, PINF=3.0e300, MINF=4.0e300, EPS=5.0e300,
-  ACR=10.0e300
+- special-value sentinel doubles (GMS_SV_*): UNDEF=1.0e300, NA=2.0e300,
+  PINF=3.0e300, MINF=4.0e300, EPS=5.0e300, ACR=10.0e300
 - type codes GMS_DT_SET..GMS_DT_ALIAS = 0..4; dim ≤ 20; UEL label ≤ 63
-  chars; explanatory text ≤ 255 chars; UEL codes 1-based,
-  insertion-ordered
-- record keys are per-dimension delta-encoded against the previous
-  record (a leading control byte gives the first changed dimension —
-  exploiting the required sorted order), with per-dimension byte widths
-  sized by a min/max element header
-- values carry a per-value type marker byte compressing common cases
-  (the TgdxIntlValTyp ladder: undef/na/+inf/-inf/eps/zero/one/-one,
-  else marker + raw 8-byte double)
+  chars; explanatory text ≤ 255 chars; UEL codes 1-based, insertion-ordered
+- record keys delta-encoded against the previous record (a leading byte
+  gives the first changed dimension — exploiting the required sorted
+  order), with per-dimension byte widths sized by a min/max header
+- a type marker byte per value (the TgdxIntlValTyp ladder: undef/na/
+  +inf/-inf/eps/zero/one/-one, else marker + raw 8-byte double)
 
-What is STRUCTURAL (layout follows the published description; byte-level
-conformance against GAMS-produced files is UNVERIFIED in this container
-— no GAMS install and an empty reference mount, SURVEY §0; the golden
-fixture in tests/test_gdx_gams.py is byte-built by hand to this spec
-and cross-checks the reader independently of the writer):
+STRUCTURAL (conformance against GAMS-produced files is UNVERIFIED — no
+GAMS install, SURVEY §0; the hand-built golden fixture in
+tests/test_gdx_gams.py checks the reader independently of the writer):
+field order in symbol-table entries and the domain section; each section
+between two copies of its marker; the major index (MARK_BOI + six int64
+seek positions — symbols, UELs, set text, acronyms, next-write, domains
+— back-patched on close); compression: with the flag set, everything
+after it is [u32 raw_len | u32 comp_len | zlib page] frames over 16 KiB
+logical pages, and major-index positions are LOGICAL offsets into the
+inflated image (standard RFC 1950 payloads; GAMS page headers UNVERIFIED).
 
-- exact field order inside the symbol-table entries and the domain
-  section encoding
-- section bracketing: each section is written between two copies of its
-  marker string
-- the major index: MARK_BOI + six int64 seek positions (symbols, UELs,
-  set text, acronyms, next-write, domains) immediately after the
-  header, back-patched on close — this is what enables direct seeks
-  (and our per-symbol partition pruning)
-- compression: GAMS compresses at stream-page level. This module
-  reads and writes zlib page streams (r6): when the header's
-  compression flag is set, everything after it is a sequence of
-  [u32 raw_len | u32 comp_len | zlib page] frames over 16 KiB logical
-  pages, and every seek position in the major index is a LOGICAL
-  offset into the decompressed image — so the reader reconstructs the
-  logical buffer once and all section seeks work unchanged. The page
-  framing is structural (real GAMS page headers are UNVERIFIED here,
-  like the rest of the layout — no GAMS install in this container);
-  the zlib payloads themselves are standard RFC 1950
-
-Scale: GDX symbols are model-sized by format contract (UEL < 2³¹,
-typically ≪10⁶ records) — a per-symbol partition is the right scan
-unit; the DataSource layer handles that (gdx_datasource).
+The layout is fixed, but no record is coded field by field in Python:
+the writer sorts, classifies and scatters a symbol's records into one
+byte buffer with numpy; the reader makes one Python pass to find where
+each record starts, then gathers keys and values with numpy. Symbols are
+model-sized by format contract, so there is no chunk index: one scan
+partition per symbol.
 """
 
 from __future__ import annotations
 
-import contextlib
 import io
 import math
 import struct
 import zlib
+from functools import partial
+
+import numpy as np
 
 from gdxpy_spark.sources.gdx_codec import (
     DT_ALIAS,
-    DT_EQU,
     DT_SET,
-    DT_VAR,
     MAX_DIM,
+    Columns,
     SymbolData,
     SymbolMeta,
+    corrupt_guard,
+    eps_bits,
+    intern_keys,
+    map_file,
+    symbol_data,
+    uint_width,
+    value_columns,
 )
 
 GDX_HEADER_NR = 123
@@ -100,11 +88,9 @@ SV_ACR = 10.0e300
 (VM_VALUND, VM_VALNA, VM_VALPIN, VM_VALMIN, VM_VALEPS, VM_ZERO, VM_ONE,
  VM_MONE, VM_NORMAL) = range(9)
 
-_VM_CONST = {
-    VM_VALUND: SV_UNDEF, VM_VALNA: SV_NA, VM_VALPIN: SV_PINF,
-    VM_VALMIN: SV_MINF, VM_VALEPS: SV_EPS, VM_ZERO: 0.0, VM_ONE: 1.0,
-    VM_MONE: -1.0,
-}
+# what each marker reads as (VM_NORMAL's double follows it in the file)
+_VM_VALUE = np.array([math.nan, math.nan, math.inf, -math.inf, 0.0, 0.0,
+                      1.0, -1.0, 0.0])
 
 _END_OF_DATA = 255  # control byte terminating a symbol's record stream
 
@@ -153,20 +139,8 @@ class GamsGdxError(ValueError):
     pass
 
 
-@contextlib.contextmanager
-def _corrupt_guard(path: str, where: str):
-    """Re-raise low-level decode failures as GamsGdxError naming the file
-    and section — corrupt bytes must fail loudly and typed, never leak a
-    raw IndexError/struct.error (r6 byte-fuzz finding, mirrored from
-    gdx_codec)."""
-    try:
-        yield
-    except (IndexError, struct.error, OverflowError, UnicodeDecodeError,
-            zlib.error, MemoryError) as exc:
-        raise GamsGdxError(
-            f"{path}: corrupt GAMS-layout container ({where}): "
-            f"{type(exc).__name__}: {exc}"
-        ) from exc
+# decode failures surface as GamsGdxError (r6 byte-fuzz contract)
+_corrupt_guard = partial(corrupt_guard, err=GamsGdxError, container="GAMS-layout")
 
 
 # --- Delphi-stream primitives (ShortString + little-endian ints) -----------
@@ -189,10 +163,6 @@ def _w_int(b: io.BytesIO, v: int) -> None:
 
 def _w_int64(b: io.BytesIO, v: int) -> None:
     b.write(struct.pack("<q", v))
-
-
-def _w_dbl(b: io.BytesIO, v: float) -> None:
-    b.write(struct.pack("<d", v))
 
 
 class _Rd:
@@ -226,81 +196,22 @@ class _Rd:
         self.pos += 8
         return v
 
-    def dbl(self) -> float:
-        (v,) = struct.unpack_from("<d", self.buf, self.pos)
-        self.pos += 8
-        return v
-
-    def raw(self, n: int) -> bytes:
-        v = self.buf[self.pos : self.pos + n]
-        self.pos += n
-        return v
-
     def expect_marker(self, mark: str, where: str) -> None:
         got = self.string()
         if got != mark:
             raise GamsGdxError(f"{where}: expected marker {mark!r}, got {got!r}")
 
 
-def _key_width(span: int) -> int:
-    if span < 1 << 8:
-        return 1
-    if span < 1 << 16:
-        return 2
-    return 4
-
-
-def _encode_value(b: io.BytesIO, v: float, is_eps: bool) -> None:
-    """Map an in-memory value (inf/nan/finite + eps flag) to the marker
-    ladder. NaN maps to NA (the reader cannot distinguish NA vs UNDEF
-    from a NaN — gdxpy collapses both to NaN on read, SURVEY §1.1)."""
-    if is_eps:
-        _w_byte(b, VM_VALEPS)
-    elif isinstance(v, float) and math.isnan(v):
-        _w_byte(b, VM_VALNA)
-    elif v == math.inf:
-        _w_byte(b, VM_VALPIN)
-    elif v == -math.inf:
-        _w_byte(b, VM_VALMIN)
-    elif v == 0.0:
-        _w_byte(b, VM_ZERO)
-    elif v == 1.0:
-        _w_byte(b, VM_ONE)
-    elif v == -1.0:
-        _w_byte(b, VM_MONE)
-    else:
-        _w_byte(b, VM_NORMAL)
-        _w_dbl(b, v)
-
-
-def _decode_value(r: _Rd) -> tuple[float, bool]:
-    """marker → (python value, is_eps); sentinel doubles from VM_NORMAL
-    payloads are also normalized (a conforming writer may emit them raw)."""
-    m = r.byte()
-    if m == VM_NORMAL:
-        v = r.dbl()
-        if v >= SV_UNDEF:  # raw sentinel double
-            if v == SV_UNDEF or v == SV_NA:
-                return math.nan, False
-            if v == SV_PINF:
-                return math.inf, False
-            if v == SV_MINF:
-                return -math.inf, False
-            if v == SV_EPS:
-                return 0.0, True
-            return v, False  # acronyms et al.: pass through
-        return v, False
-    if m == VM_VALEPS:
-        return 0.0, True
-    if m in (VM_VALUND, VM_VALNA):
-        return math.nan, False
-    if m == VM_VALPIN:
-        return math.inf, False
-    if m == VM_VALMIN:
-        return -math.inf, False
-    if m in (VM_ZERO, VM_ONE, VM_MONE):
-        return _VM_CONST[m], False
-    raise GamsGdxError(f"bad value marker {m}")
+def _markers(v: np.ndarray, eps: np.ndarray) -> np.ndarray:
+    """(n, n_values) in-memory values (inf/nan/finite + eps flags) → the
+    marker ladder. NaN maps to NA (the reader cannot distinguish NA vs
+    UNDEF from a NaN — gdxpy collapses both to NaN on read, SURVEY §1.1)."""
+    return np.select(
+        [eps_bits(eps, v.shape[1]), np.isnan(v), v == math.inf, v == -math.inf,
+         v == 0.0, v == 1.0, v == -1.0],
+        [VM_VALEPS, VM_VALNA, VM_VALPIN, VM_VALMIN, VM_ZERO, VM_ONE, VM_MONE],
+        VM_NORMAL,
+    ).astype(np.uint8)
 
 
 class GamsGdxWriter:
@@ -319,23 +230,11 @@ class GamsGdxWriter:
         self.set_texts: list[str] = [""]
         self._text_idx: dict[str, int] = {"": 0}
 
-    def _code(self, label: str) -> int:
-        c = self._uel_code.get(label)
-        if c is None:
-            if len(label) > 63:
-                raise GamsGdxError(f"UEL label > 63 chars: {label!r}")
-            self.uels.append(label)
-            c = len(self.uels)  # 1-based
-            self._uel_code[label] = c
-        return c
-
     def _text(self, t: str) -> int:
-        i = self._text_idx.get(t)
-        if i is None:
+        if t not in self._text_idx:
             self.set_texts.append(t)
-            i = len(self.set_texts) - 1
-            self._text_idx[t] = i
-        return i
+            self._text_idx[t] = len(self.set_texts) - 1
+        return self._text_idx[t]
 
     def add_symbol(self, data: SymbolData) -> None:
         if any(s.meta.name.lower() == data.meta.name.lower() for s in self.symbols):
@@ -344,55 +243,62 @@ class GamsGdxWriter:
         self.symbols.append(data)
 
     def _encode_data(self, out: io.BytesIO, sym: SymbolData) -> int:
-        """One `_DATA_`-bracketed block; returns its start offset."""
+        """One `_DATA_`-bracketed block; returns its start offset. Records
+        sort by coded key tuple (GDX contract); each is [first-changed
+        dimension fc | key deltas of dims fc.. | per value: marker, plus
+        a double after VM_NORMAL], scattered into one byte buffer."""
         pos = out.tell()
         _w_str(out, MARK_DATA)
         m = sym.meta
-        _w_byte(out, m.dim)
-        _w_int(out, len(sym.keys))
+        n, dim = len(sym.keys), m.dim
+        _w_byte(out, dim)
+        _w_int(out, n)
+        codes = intern_keys(sym.keys, dim, self._uel_code, self.uels, m.name,
+                            GamsGdxError)
+        order = np.lexsort(codes[::-1]) if dim else np.arange(n)
+        codes = codes[:, order]
+        # per dim: min and max code (empty symbols: degenerate 1..1 range)
+        bounds = (np.stack([codes.min(axis=1), codes.max(axis=1)], axis=1) if n
+                  else np.ones((dim, 2), np.int64))
+        out.write(bounds.astype("<i4").tobytes())
+        mins = bounds[:, 0]
+        widths = [uint_width(hi - lo) for lo, hi in bounds.tolist()]
+        cum = np.concatenate([[0], np.cumsum(widths, dtype=np.int64)])
+        # fc = dim + 1: only the value changed (dim-0 scalars, repeated keys)
+        fc = np.ones(n, np.int64)
+        if dim and n > 1:
+            diff = codes[:, 1:] != codes[:, :-1]
+            fc[1:] = np.where(diff.any(axis=0), diff.argmax(axis=0) + 1, dim + 1)
 
-        # intern keys, sort records by coded key tuple (GDX contract)
-        coded = []
-        for i, key in enumerate(sym.keys):
-            if len(key) != m.dim:
-                raise GamsGdxError(f"{m.name}: key arity {len(key)} != dim {m.dim}")
-            coded.append((tuple(self._code(k) for k in key), i))
-        coded.sort(key=lambda t: t[0])
-
-        mins = [1] * m.dim  # empty symbols: degenerate 1..1 range
-        maxs = [1] * m.dim
-        for d in range(m.dim):
-            col = [c[0][d] for c in coded]
-            if col:
-                mins[d], maxs[d] = min(col), max(col)
-        for d in range(m.dim):
-            _w_int(out, mins[d])
-            _w_int(out, maxs[d])
-        widths = [_key_width(maxs[d] - mins[d]) for d in range(m.dim)]
-
-        prev: tuple[int, ...] | None = None
-        for ck, i in coded:
-            if prev is None:
-                fc = 1
-            else:
-                fc = m.dim + 1  # pure value change (dim-0 scalars)
-                for d in range(m.dim):
-                    if ck[d] != prev[d]:
-                        fc = d + 1
-                        break
-            _w_byte(out, fc)
-            for d in range(fc - 1, m.dim):
-                delta = ck[d] - mins[d]
-                out.write(delta.to_bytes(widths[d], "little"))
-            if m.type == DT_SET:
-                ti = self._text(sym.text[i] if sym.text else "")
-                _encode_value(out, float(ti), False)
-            else:
-                vals = sym.values[i]
-                eps = sym.eps_mask[i] if sym.eps_mask else 0
-                for j in range(m.n_values):
-                    _encode_value(out, vals[j], bool(eps >> j & 1))
-            prev = ck
+        if m.type == DT_SET:
+            texts = sym.text or [""] * n
+            v = np.array([self._text(texts[i]) for i in order.tolist()],
+                         np.float64).reshape(n, 1)
+            mk = _markers(v, np.zeros(n, np.int64))
+        else:
+            v, eps = value_columns(sym.values, sym.eps_mask, n, m.n_values)
+            v = v[order]
+            mk = _markers(v, eps[order])
+        normal = mk == VM_NORMAL
+        keylen = cum[dim] - cum[fc - 1]
+        reclen = 1 + keylen + mk.shape[1] + 8 * normal.sum(axis=1)
+        start = np.cumsum(reclen) - reclen
+        buf = np.zeros(int(reclen.sum()), np.uint8)
+        buf[start] = fc
+        for d in range(dim):
+            has = fc - 1 <= d
+            p = start[has] + 1 + cum[d] - cum[fc[has] - 1]
+            delta = codes[d, has] - mins[d]
+            for byte in range(widths[d]):
+                buf[p + byte] = delta >> 8 * byte & 0xFF
+        p = start + 1 + keylen
+        for j in range(mk.shape[1]):
+            buf[p] = mk[:, j]
+            sel = normal[:, j]
+            buf[(p[sel] + 1)[:, None] + np.arange(8)] = (
+                v[sel, j].astype("<f8").view(np.uint8).reshape(-1, 8))
+            p = p + 1 + 8 * sel
+        out.write(buf.tobytes())
         _w_byte(out, _END_OF_DATA)
         _w_str(out, MARK_DATA)
         return pos
@@ -431,24 +337,15 @@ class GamsGdxWriter:
             _w_int(out, by_name.get(m.alias_of.lower(), 0) if m.type == DT_ALIAS else 0)
         _w_str(out, MARK_SYMB)
 
-        uel_pos = out.tell()
-        _w_str(out, MARK_UEL)
-        _w_int(out, len(self.uels))
-        for u in self.uels:
-            _w_str(out, u)
-        _w_str(out, MARK_UEL)
-
-        sett_pos = out.tell()
-        _w_str(out, MARK_SETT)
-        _w_int(out, len(self.set_texts))
-        for t in self.set_texts:
-            _w_str(out, t)
-        _w_str(out, MARK_SETT)
-
-        acro_pos = out.tell()
-        _w_str(out, MARK_ACRO)
-        _w_int(out, 0)
-        _w_str(out, MARK_ACRO)
+        table_pos = []  # UEL, set-text and (empty) acronym tables
+        for mark, items in ((MARK_UEL, self.uels), (MARK_SETT, self.set_texts),
+                            (MARK_ACRO, [])):
+            table_pos.append(out.tell())
+            _w_str(out, mark)
+            _w_int(out, len(items))
+            for item in items:
+                _w_str(out, item)
+            _w_str(out, mark)
 
         doms_pos = out.tell()
         _w_str(out, MARK_DOMS)
@@ -461,7 +358,7 @@ class GamsGdxWriter:
         buf = bytearray(out.getvalue())
         struct.pack_into(
             "<qqqqqq", buf, index_pos + 4,
-            symb_pos, uel_pos, sett_pos, acro_pos, next_pos, doms_pos,
+            symb_pos, *table_pos, next_pos, doms_pos,
         )
         blob = bytes(buf)
         if self.compress:
@@ -479,8 +376,7 @@ class GamsGdxFile:
 
     def __init__(self, path: str):
         self.path = path
-        with open(path, "rb") as f:
-            buf = f.read()
+        buf = map_file(path)
         if not buf or buf[0] != GDX_HEADER_NR or buf[2:9] != GDX_HEADER_ID:
             raise GamsGdxError(f"{path}: not a GAMS-layout GDX file")
         with _corrupt_guard(path, "catalog"):
@@ -522,27 +418,22 @@ class GamsGdxFile:
         r.pos = sett_pos
         r.expect_marker(MARK_SETT, "settext")
         self.set_texts = [r.string() for _ in range(r.int32())]
+        self.text_table = self.set_texts  # Columns.text indexes this
 
         r.pos = symb_pos
         r.expect_marker(MARK_SYMB, "symbols")
         n = r.int32()
         self.symbols: list[SymbolMeta] = []
         self._data_pos: list[int] = []
-        names: list[str] = []
         raw_alias: list[int] = []
         for _ in range(n):
-            name = r.string()
-            dp = r.int64()
-            dim = r.int32()
-            typ = r.byte()
-            subtype = r.int32()
-            nrecs = r.int32()
-            r.int32()  # error count
-            expl = r.string()
-            alias_idx = r.int32()
+            # entry: name, data position, dim, type, subtype, records,
+            # error count, explanatory text, alias target (1-based)
+            name, dp, dim, typ, subtype, nrecs, _errors, expl, alias_idx = (
+                r.string(), r.int64(), r.int32(), r.byte(), r.int32(), r.int32(),
+                r.int32(), r.string(), r.int32())
             if not (0 <= dim <= MAX_DIM):
                 raise GamsGdxError(f"{name}: dim {dim} out of range")
-            names.append(name)
             raw_alias.append(alias_idx)
             self.symbols.append(
                 SymbolMeta(name=name, dim=dim, type=typ, subtype=subtype,
@@ -555,8 +446,8 @@ class GamsGdxFile:
         for m in self.symbols:
             m.domains = tuple(r.string() for _ in range(m.dim))
         for m, ai in zip(self.symbols, raw_alias):
-            if m.type == DT_ALIAS and 1 <= ai <= len(names):
-                m.alias_of = names[ai - 1]
+            if m.type == DT_ALIAS and 1 <= ai <= len(self.symbols):
+                m.alias_of = self.symbols[ai - 1].name
 
     # -- GdxFile-compatible surface -----------------------------------
 
@@ -574,52 +465,96 @@ class GamsGdxFile:
         return None  # no per-chunk key statistics in the GAMS layout
 
     def read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
-        with _corrupt_guard(self.path, f"records[{idx}]"):
-            return self._read_records(idx, chunk)
-
-    def _read_records(self, idx: int, chunk: int | None = None) -> SymbolData:
         m = self.symbols[idx]
         if m.type == DT_ALIAS:
-            return self._read_records(self.find(m.alias_of))
+            return self.read_records(self.find(m.alias_of))
+        return symbol_data(m, self.read_columns(idx), self.uels, self.text_table)
+
+    def read_columns(self, idx: int, chunk: int | None = None) -> Columns:
+        with _corrupt_guard(self.path, f"records[{idx}]"):
+            m = self.symbols[idx]
+            if m.type == DT_ALIAS:
+                return self.read_columns(self.find(m.alias_of))
+            cols = self._read_columns(m, self._data_pos[idx])
+            return cols.check(len(self.uels), len(self.set_texts), GamsGdxError)
+
+    def _read_columns(self, m: SymbolMeta, data_pos: int) -> Columns:
         r = _Rd(self._r.buf)
-        r.pos = self._data_pos[idx]
+        r.pos = data_pos
         r.expect_marker(MARK_DATA, m.name)
         dim = r.byte()
-        nrecs = r.int32()
+        n = r.int32()
         if dim != m.dim:
             raise GamsGdxError(f"{m.name}: data dim {dim} != catalog dim {m.dim}")
-        mins, widths = [], []
-        for _ in range(dim):
-            lo = r.int32()
-            hi = r.int32()
-            mins.append(lo)
-            widths.append(_key_width(hi - lo))
-        out = SymbolData(meta=m)
-        cur = [0] * dim
-        for _ in range(nrecs):
-            fc = r.byte()
+        if n < 0:
+            raise GamsGdxError(f"{m.name}: record count {n}")
+        bounds = [(r.int32(), r.int32()) for _ in range(dim)]
+        mins = [lo for lo, _ in bounds]
+        widths = [uint_width(hi - lo) for lo, hi in bounds]
+        cum = np.concatenate([[0], np.cumsum(widths, dtype=np.int64)])
+        tail = (cum[dim] - cum).tolist()  # key bytes of a record with fc = k + 1
+        nv = m.n_values
+        # the one Python pass: record lengths vary with fc and with the
+        # VM_NORMAL payloads, so find where each record starts
+        buf, pos, starts = r.buf, r.pos, []
+        for _ in range(n):
+            fc = buf[pos]
             if fc == _END_OF_DATA:
                 raise GamsGdxError(f"{m.name}: truncated record stream")
-            for d in range(fc - 1, dim):
-                cur[d] = mins[d] + int.from_bytes(r.raw(widths[d]), "little")
-            out.keys.append(tuple(self.uels[c - 1] for c in cur[:dim]))
-            if m.type == DT_SET:
-                v, _ = _decode_value(r)
-                out.text.append(self.set_texts[int(v)])
-                out.values.append((0.0,))
-                out.eps_mask.append(0)
-            else:
-                vals, eps = [], 0
-                for j in range(m.n_values):
-                    v, is_eps = _decode_value(r)
-                    vals.append(v)
-                    eps |= int(is_eps) << j
-                out.values.append(tuple(vals))
-                out.eps_mask.append(eps)
+            if not 0 < fc <= dim + 1:
+                raise GamsGdxError(f"{m.name}: bad first-changed dimension {fc}")
+            starts.append(pos)
+            pos += 1 + tail[fc - 1]
+            for _ in range(nv):
+                pos += 9 if buf[pos] == VM_NORMAL else 1
+        r.pos = pos
         if r.byte() != _END_OF_DATA:
             raise GamsGdxError(f"{m.name}: missing end-of-data byte")
         r.expect_marker(MARK_DATA, m.name)
-        return out
+
+        a = np.frombuffer(buf, np.uint8)
+        s = np.array(starts, np.int64)
+        fc = a[s].astype(np.int64)
+        rec = np.arange(n)
+        codes = np.zeros((dim, n), np.int64)
+        for d in range(dim):
+            has = fc - 1 <= d
+            p = s[has] + 1 + cum[d] - cum[fc[has] - 1]
+            delta = np.zeros(len(p), np.int64)
+            for byte in range(widths[d]):
+                delta |= a[p + byte].astype(np.int64) << 8 * byte
+            col = np.zeros(n, np.int64)
+            col[has] = mins[d] + delta
+            # dims before fc repeat the last record that wrote them; none
+            # yet → code 0, which the UEL range check rejects
+            last = np.maximum.accumulate(np.where(has, rec, -1))
+            codes[d] = np.where(last >= 0, col[last], 0)
+
+        vpos = s + 1 + np.array(tail, np.int64)[fc - 1]
+        vals = np.empty((n, nv))
+        eps = np.zeros(n, np.int64)
+        for j in range(nv):
+            mk = a[vpos]
+            if n and mk.max() > VM_NORMAL:
+                raise GamsGdxError(f"bad value marker {mk.max()}")
+            v, is_eps, sel = _VM_VALUE[mk], mk == VM_VALEPS, mk == VM_NORMAL
+            raw = a[(vpos[sel] + 1)[:, None] + np.arange(8)].view("<f8").ravel()
+            # sentinel doubles in VM_NORMAL payloads normalise too (a
+            # conforming writer may emit them raw); others pass through
+            v[sel] = np.select(
+                [(raw == SV_UNDEF) | (raw == SV_NA), raw == SV_PINF,
+                 raw == SV_MINF, raw == SV_EPS], [math.nan, math.inf, -math.inf, 0.0],
+                raw)
+            is_eps[sel] = raw == SV_EPS
+            vals[:, j] = v
+            eps |= is_eps.astype(np.int64) << j
+            vpos = vpos + 1 + 8 * sel
+        if m.type != DT_SET:
+            return Columns(codes, vals, eps)
+        t = vals[:, 0]  # a set record's value is its set-text index
+        if not np.all((t >= 0) & (t < len(self.set_texts)) & (t == np.trunc(t))):
+            raise GamsGdxError(f"{m.name}: set-text index outside the text table")
+        return Columns(codes, np.zeros((n, 1)), np.zeros(n, np.int64), t.astype(np.int64))
 
 
 def is_gams_layout(path: str) -> bool:

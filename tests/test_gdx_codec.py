@@ -10,9 +10,10 @@ import math
 import os
 import tempfile
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from gdxpy_spark.sources.gdx_codec import (
+    CHUNK,
     DT_ALIAS,
     DT_EQU,
     DT_PAR,
@@ -81,11 +82,40 @@ def symbol(draw, typ=None):
     return SymbolData(meta=meta, keys=keys, values=vals, eps_mask=eps, text=text)
 
 
+# chunk-boundary inputs: more records than chunk_records (specials and
+# EPS across the split), an empty symbol, dim 20, and set text
+SPLIT = SymbolData(
+    SymbolMeta("split", 2, DT_PAR),
+    keys=[(f"a{i % 3}", f"b{i}") for i in range(7)],
+    values=[(v,) for v in (1.5, 0.0, math.nan, math.inf, -math.inf, 0.0, 300.0)],
+    eps_mask=[0, 1, 0, 0, 0, 1, 0],
+)
+EMPTY = SymbolData(SymbolMeta("empty", 2, DT_PAR))
+DEEP = SymbolData(
+    SymbolMeta("deep", 20, DT_VAR),
+    keys=[tuple(f"d{j}_{i % 2}" for j in range(19)) + (f"x{i}",) for i in range(5)],
+    values=[(float(i), 0.0, -math.inf, math.inf, 1.0) for i in range(5)],
+    eps_mask=[0, 2, 0, 0, 0],
+)
+TEXTS = SymbolData(
+    SymbolMeta("texts", 1, DT_SET),
+    keys=[(f"e{i}",) for i in range(5)],
+    values=[(0.0,)] * 5,
+    eps_mask=[0] * 5,
+    text=["", "x", "some text", "", "x"],
+)
+
+
 @settings(max_examples=30, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(sym=symbol(), compress=st.booleans())
-def test_roundtrip_property(sym, compress):
+@given(sym=symbol(), compress=st.booleans(), chunk_records=st.sampled_from([CHUNK, 1, 4]))
+@example(sym=SPLIT, compress=False, chunk_records=3)
+@example(sym=SPLIT, compress=True, chunk_records=1)
+@example(sym=EMPTY, compress=False, chunk_records=1)
+@example(sym=DEEP, compress=True, chunk_records=2)
+@example(sym=TEXTS, compress=False, chunk_records=2)
+def test_roundtrip_property(sym, compress, chunk_records):
     path = _tmp("prop.gdx")
-    w = GdxWriter(path, compress=compress)
+    w = GdxWriter(path, compress=compress, chunk_records=chunk_records)
     w.add_symbol(sym)
     w.close()
 
@@ -357,6 +387,56 @@ def test_corrupt_bytes_never_leak_raw_exceptions():
     fuzz(w_codec, GdxFile)
     fuzz(w_gams, G.GamsGdxFile)
 
+    def multi():  # ints, doubles, specials and EPS over three v3 chunks
+        return SymbolData(
+            meta=SymbolMeta("m", 2, DT_PAR),
+            keys=[(f"a{i % 4}", f"b{i}") for i in range(10)],
+            values=[(v,) for v in (1.0, 2.5, 0.0, math.nan, math.inf, -7.0,
+                                   0.0, 1e6, -math.inf, 40000.0)],
+            eps_mask=[0, 0, 0, 0, 0, 0, 1, 0, 0, 0],
+        )
+
+    def w_multi(writer):
+        def write(path):
+            w = writer(path)
+            for sym in (multi(), TEXTS, DEEP):
+                w.add_symbol(sym)
+            w.close()
+        return write
+
+    w_codec_chunks = w_multi(lambda p: GdxWriter(p, chunk_records=4))
+    w_gams_plain = w_multi(G.GamsGdxWriter)
+    fuzz(w_codec_chunks, GdxFile, n=300)
+    fuzz(w_gams_plain, G.GamsGdxFile, n=300)
+
+    # a corrupt index or marker must raise, never wrap or clamp onto a
+    # real label or value
+    def patched(write, offset_of, byte):
+        path = _tmp("patch.gdx")
+        write(path)
+        raw = bytearray(open(path, "rb").read())
+        raw[offset_of(path, bytes(raw))] = byte
+        with open(path, "wb") as fh:
+            fh.write(raw)
+        return path
+
+    def v3_chunk0(path, raw):  # [w][4 dim-1 codes][w][4 dim-2 codes][markers]
+        f = GdxFile(path)
+        return f.block_offsets[f.find("m")]
+
+    for delta, byte in ((1, 0), (1, 255), (10, 9)):
+        bad = patched(w_codec_chunks, lambda p, r: v3_chunk0(p, r) + delta, byte)
+        with _pytest.raises(ValueError, match="UEL code|marker"):
+            GdxFile(bad).read_records(0)
+
+    def gams_rec0(path, raw):  # _DATA_, dim, count, 2 x (min, max), then fc
+        return raw.index(b"\x06_DATA_") + 7 + 1 + 4 + 16
+
+    for delta, byte in ((0, 0), (1, 200), (3, 9)):
+        bad = patched(w_gams_plain, lambda p, r: gams_rec0(p, r) + delta, byte)
+        with _pytest.raises(G.GamsGdxError, match="first-changed|UEL code|marker"):
+            G.GamsGdxFile(bad).read_records(0)
+
 
 # ---- format-limit + variable-kind default-bound fixtures (r10) --------------
 
@@ -455,3 +535,93 @@ def test_dim20_symbol_roundtrip(layout, wcls, rcls):
         assert all(
             _eq_val(a[0], b[0]) for a, b in zip(got.values, sd.values)
         )
+
+
+# ---- version-2 container, read by the version-3 reader ---------------------
+
+V2_FIXTURE = os.path.join(os.path.dirname(__file__), "data", "v2_all_types.gdx")
+
+
+def _compat_symbols():
+    """The content of tests/data/v2_all_types.gdx: every symbol type,
+    EPS/NA/±INF and integer/double values, a dim-0 scalar and an alias,
+    plus ("flow", records) streamed in caller order."""
+    regions = [f"r{i}" for i in range(6)]
+    techs = ["coal", "gas", "wind"]
+    s = SymbolData(SymbolMeta("s", 1, DT_SET, expl_text="regions"),
+                   keys=[(r,) for r in regions], values=[(0.0,)] * 6,
+                   eps_mask=[0] * 6,
+                   text=["", "north", "south", "", "north", "east"])
+    specials = [0.0, 1.0, -7.0, 300.0, 2.5, math.nan, math.inf, -math.inf,
+                1e300, -2.0**31, 2.0**31, 0.1]
+    cap_keys = [(r, t) for r in regions for t in techs]
+    cap_eps = [1 if i % 7 == 3 else 0 for i in range(len(cap_keys))]
+    cap = SymbolData(SymbolMeta("cap", 2, DT_PAR, domains=("s", "*")),
+                     keys=cap_keys, eps_mask=cap_eps,
+                     values=[(0.0,) if e else (specials[i % len(specials)],)
+                             for i, e in enumerate(cap_eps)])
+    x_keys = [(r, t) for r in regions[:2] for t in techs]
+    x = SymbolData(SymbolMeta("x", 2, DT_VAR, subtype=3, expl_text="build"),
+                   keys=x_keys,
+                   values=[(float(i) + 0.5, 0.0 if i == 2 else -1.25 * i, 0.0,
+                            math.inf if i % 2 else 40.0, 1.0)
+                           for i in range(len(x_keys))],
+                   eps_mask=[0b00010 if i == 2 else 0 for i in range(len(x_keys))])
+    e = SymbolData(SymbolMeta("e", 1, DT_EQU, subtype=1),
+                   keys=[(r,) for r in regions],
+                   values=[(math.nan if i == 4 else 0.0 if i == 1 else float(i),
+                            0.0, -math.inf, float(i), 1.0) for i in range(6)],
+                   eps_mask=[0b00001 if i == 1 else 0 for i in range(6)])
+    total = SymbolData(SymbolMeta("total", 0, DT_PAR, expl_text="scalar"),
+                       keys=[()], values=[(153.675,)], eps_mask=[0])
+    alias = SymbolData(SymbolMeta("rr", 1, DT_ALIAS, alias_of="s"))
+    flow = [((r, t), (0.0 if k == 4 else k * 0.25,), int(k == 4), "")
+            for k, (r, t) in enumerate(
+                (r, t) for t in reversed(techs) for r in regions[:3])]
+    return [s, cap, x, e, total, alias], ("flow", flow)
+
+
+def _write_compat(path):
+    """How the fixture was made (with the version-2 GdxWriter)."""
+    syms, (name, flow) = _compat_symbols()
+    w = GdxWriter(path, producer="gdxpy_spark v2", compress=True, chunk_records=4)
+    w.add_symbol(syms[0])
+    w.add_symbol(syms[1])
+    w.add_symbol_streaming(SymbolMeta(name, 2, DT_PAR, expl_text="streamed"), iter(flow))
+    for sym in syms[2:]:
+        w.add_symbol(sym)
+    w.close()
+
+
+def test_v2_container_reads_unchanged():
+    """A compressed, multi-chunk file written by the version-2 writer
+    decodes to the same SymbolData through the version-3 reader, whole
+    and chunk by chunk: v1/v2 stay readable after the columnar v3."""
+    f = GdxFile(V2_FIXTURE)
+    assert (f.version, f.compressed, f.chunk_records) == (2, True, 4)
+    assert [m.name for m in f.symbols] == ["s", "cap", "flow", "x", "e", "total", "rr"]
+    syms, (name, flow) = _compat_symbols()
+    code = {u: i for i, u in enumerate(f.uels)}
+    want = [  # add_symbol records read back in mapped order
+        (s.meta, sorted(zip(s.keys, s.values, s.eps_mask, s.text or [""] * len(s.keys)),
+                        key=lambda r: [code[k] for k in r[0]]))
+        for s in syms if s.meta.type != DT_ALIAS
+    ] + [(SymbolMeta(name, 2, DT_PAR, expl_text="streamed"), flow)]
+    for meta, recs in want:
+        idx = f.find(meta.name)
+        got = f.read_records(idx)
+        assert (got.meta.dim, got.meta.type, got.meta.subtype, got.meta.expl_text,
+                got.meta.domains, got.meta.nrecs) == (
+            meta.dim, meta.type, meta.subtype, meta.expl_text, meta.domains, len(recs))
+        assert got.keys == [r[0] for r in recs]
+        assert got.eps_mask == [r[2] for r in recs]
+        for gv, r in zip(got.values, recs):
+            assert len(gv) == meta.n_values
+            assert all(_eq_val(a, b) for a, b in zip(gv, r[1])), (meta.name, gv, r)
+        if meta.type == DT_SET:
+            assert got.text == [r[3] for r in recs]
+        pieces = [f.read_records(idx, chunk=c) for c in range(f.n_chunks(idx))]
+        assert [k for p in pieces for k in p.keys] == got.keys
+        assert [v for p in pieces for v in p.eps_mask] == got.eps_mask
+    assert f.n_chunks(f.find("cap")) == 5
+    assert f.read_records(f.find("rr")).keys == f.read_records(f.find("s")).keys

@@ -399,15 +399,19 @@ def test_roundtrip_property_gams():
     container (r6)."""
     import math as _math
 
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
 
-    from tests.test_gdx_codec import _eq_val, _tmp, symbol
+    from tests.test_gdx_codec import DEEP, EMPTY, SPLIT, TEXTS, _eq_val, _tmp, symbol
 
     import hypothesis.strategies as st
 
     @settings(max_examples=30, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     @given(sym=symbol(), compress=st.booleans())
+    @example(sym=SPLIT, compress=False)
+    @example(sym=EMPTY, compress=True)
+    @example(sym=DEEP, compress=False)
+    @example(sym=TEXTS, compress=True)
     def run(sym, compress):
         path = _tmp("prop_gams.gdx")
         w = G.GamsGdxWriter(path, compress=compress)
@@ -523,3 +527,77 @@ def test_malformed_inputs_fail_loudly(tmp_path):
     z = zlib_wrap_golden(raw)
     with pytest.raises(G.GamsGdxError, match="truncated"):
         G.GamsGdxFile(write(z[: len(z) - 5], "trunc.gdx"))
+
+
+def _pinned_model(seed: int = 5) -> list[SymbolData]:
+    """A seeded model: set text, a dim-2 parameter given unsorted with
+    EPS/NA/±INF/0/±1 and > 256 labels in one dimension (2-byte keys), a
+    variable with all five fields and EPS marginals, a dim-0 scalar and
+    an alias."""
+    import random
+
+    from gdxpy_spark.sources.gdx_codec import DT_ALIAS
+
+    rng = random.Random(seed)
+    plants = [f"p{i:02d}" for i in range(12)]
+    markets = [f"m{i:03d}" for i in range(300)]
+    i_set = SymbolData(SymbolMeta("i", 1, DT_SET, expl_text="plants"),
+                       keys=[(p,) for p in plants],
+                       text=[rng.choice(["", "hub", "port", ""]) for _ in plants])
+    specials = [0.0, 1.0, -1.0, math.nan, math.inf, -math.inf]
+    keys = [(p, m) for p in plants for m in rng.sample(markets, 40)]
+    rng.shuffle(keys)
+    vals, eps = [], []
+    for _ in keys:
+        r = rng.random()
+        if r < 0.05:
+            vals.append((0.0,))
+            eps.append(1)
+        elif r < 0.25:
+            vals.append((rng.choice(specials),))
+            eps.append(0)
+        else:
+            vals.append((rng.uniform(-1e4, 1e4),))
+            eps.append(0)
+    d = SymbolData(SymbolMeta("d", 2, DT_PAR, domains=("i", "*")),
+                   keys=keys, values=vals, eps_mask=eps)
+    x = SymbolData(SymbolMeta("x", 1, DT_VAR, subtype=3, expl_text="ship"),
+                   keys=[(p,) for p in plants],
+                   values=[(rng.uniform(0, 50), 0.0, 0.0,
+                            rng.choice([math.inf, 80.0]), 1.0) for _ in plants],
+                   eps_mask=[0b00010 if n % 4 == 1 else 0 for n in range(len(plants))])
+    total = SymbolData(SymbolMeta("total", 0, DT_PAR), keys=[()],
+                       values=[(rng.uniform(0, 1e6),)], eps_mask=[0])
+    alias = SymbolData(SymbolMeta("ii", 1, DT_ALIAS, alias_of="i"))
+    return [i_set, d, x, total, alias]
+
+
+# sha256 of the per-record writer's output on _pinned_model(): the V7
+# layout is fixed, so the vectorised writer must reproduce it byte for byte
+PINNED_SHA256 = {
+    False: "38b308fb2ec11796965ba30e6a332349f7c2613fb7f494ecb3ec8c1387cc0771",
+    True: "76891332d5b55e45d089b5f7cb2d2f43fccf6c17ce923970f947acdbec6c1fc5",
+}
+
+
+@pytest.mark.parametrize("compress", [False, True])
+def test_writer_bytes_pinned(tmp_path, compress):
+    import hashlib
+
+    p = str(tmp_path / "pinned.gdx")
+    w = G.GamsGdxWriter(p, compress=compress)
+    model = _pinned_model()
+    for sym in model:
+        w.add_symbol(sym)
+    w.close()
+    assert hashlib.sha256(open(p, "rb").read()).hexdigest() == PINNED_SHA256[compress]
+    f = G.GamsGdxFile(p)
+    d = f.read_records(f.find("d"))
+    code = {u: n for n, u in enumerate(f.uels)}
+    want = sorted(zip(model[1].keys, model[1].values, model[1].eps_mask),
+                  key=lambda r: [code[k] for k in r[0]])
+    assert d.keys == [r[0] for r in want] and d.eps_mask == [r[2] for r in want]
+    assert all(a == b or (a != a and b != b)
+               for (a,), (_, (b,), _) in zip(d.values, want))
+    assert f.read_records(f.find("i")).text == model[0].text
+    assert f.read_records(f.find("ii")).keys == model[0].keys
